@@ -212,10 +212,10 @@ object Bench {
       // incremental PageRank maintenance at the same scale: a ~0.5% link
       // batch (mostly rewires between stored nodes + a tail of brand-new
       // nodes) folds into the stored per-iteration history; full_sec is
-      // the naive alternative (re-rank old ∪ batch from scratch, same DF
-      // engine). update must match the full re-rank row-for-row — the
-      // join-match count re-checks the LinkGraphSpec equality at bench
-      // scale, not just row counts.
+      // the naive alternative (re-rank old ∪ batch from scratch). update
+      // must match the full re-rank row-for-row — the join-match count
+      // re-checks the LinkGraphSpec equality at bench scale, not just
+      // row counts.
       val prBatch = spark.range(0, nPr / 256)
         .select(pmod(col("id") * 131, lit(nPr)).as("src"),
           pmod(col("id") * 131 + 7, lit(nPr)).as("dst"))
@@ -258,21 +258,11 @@ object Bench {
       var fullRows = 0L
       var fullDf: org.apache.spark.sql.DataFrame = null
       val lFull = graft.metrics.Metrics.register(spark, logEveryTasks = 0)
-      // pin the baseline to the DF engine regardless of bench scale: at
-      // SPARK_GRAFT_BENCH_URLS small enough that old∪batch dips under the
-      // dispatch threshold, pagerank() would silently run the RDD loop and
-      // the fold-vs-full shuffle comparison would cross engines
-      val prevThreshold = spark.conf.getOption("graft.graph.datasetThreshold")
-      spark.conf.set("graft.graph.datasetThreshold", "0")
       val tFullPr = min2 {
         if (fullDf != null) { fullDf.unpersist(); () }
         fullDf = LinkGraph.pagerank(prEdges.unionByName(prBatch), iterations = 3)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         fullRows = fullDf.count()
-      }
-      prevThreshold match {
-        case Some(v) => spark.conf.set("graft.graph.datasetThreshold", v)
-        case None => spark.conf.unset("graft.graph.datasetThreshold")
       }
       val sFull = lFull.snapshot
       lFull.unregister()
@@ -295,8 +285,8 @@ object Bench {
     * it in isolation for local iteration): close a million-edge pair
     * graph — random mean-degree-~1 noise (the realistic near-dup
     * component-size distribution) plus 200 disjoint 1000-node chains (the
-    * diameter worst case) — through the DATASET engine and report wall
-    * seconds, star rounds, labelled nodes. */
+    * diameter worst case) — and report wall seconds, star rounds,
+    * labelled nodes. */
   private def ccScaleSection(spark: SparkSession, benchUrls: Long): String = {
     import org.apache.spark.sql.functions._
     val nNodes = benchUrls
@@ -738,12 +728,8 @@ object Bench {
     // scale (OpsSpec proves it at spec scale; the d20 oracle cross-engine).
     val semMaint = semMaintSection(spark, benchUrls)
 
-    // -- graph_scale: the LinkGraph DATASET engines at million-edge scale -
-    // g1/g2 run the RDD engine at query scale (the measured small-graph
-    // winner); this section drives the SAME operators past
-    // graft.graph.datasetThreshold so the large-graph shape — Tungsten
-    // rounds, AQE-planned joins, the 10^10-edge posture — has a measured
-    // number too (the LinkGraph twin of cc_scale). Redirect chains are
+    // -- graph_scale: the LinkGraph operators at million-edge scale -------
+    // (the LinkGraph twin of cc_scale). Redirect chains are
     // ≤ 63 hops so resolution completes inside the default maxChain cap
     // (7 pointer-doubling rounds); every 4096th block closes into a
     // 64-cycle so the unresolved path stays exercised.

@@ -307,32 +307,18 @@ object Dedup {
     * (wrong) labelling; the O(log² n) bound makes the default
     * unreachable for any real pair set.
     *
-    * The ITERATION ENGINE is chosen per call from the measured canonical
-    * edge count (`graft.cc.datasetThreshold`, default 500k — the measured
-    * crossover on local[32]); neither engine wins everywhere:
-    *  - BELOW the threshold it runs on `RDD[(Long, Long)]` — the one
-    *    deliberate RDD use in the engine. The round's plan SHAPE never
-    *    changes, only its leaf data, yet re-deriving it as Datasets pays
-    *    ~2–2.7 s of DRIVER-side Catalyst analysis + whole-stage-codegen
-    *    compilation per round against well under 0.1 s of execution at
-    *    query scale (profiled; it is also why GraphX iterates on RDDs);
-    *    the RDD closures compile once per JVM → ~0.4 s/round.
-    *  - ABOVE it the SAME rounds run as DataFrames: RDD tuple ops move
-    *    boxed Tuple2s through Java-serialized shuffles at ~0.5M rows/s
-    *    per thread (measured; Kryo indistinguishable), while Tungsten
-    *    executes the identical round ~11× faster at 1.2M edges, and the
-    *    compile floor amortizes to nothing at 10^10 pairs — where
-    *    columnar execution plus AQE re-planning each round's shuffle
-    *    width as the edge set shrinks is exactly the cluster posture.
-    * Edge derivation (in) and labelling (out) stay Catalyst either way.
-    * In the RDD loop all shuffles share ONE HashPartitioner sized from
-    * the edge count (~50k edges/partition — small enough that compute,
-    * not scheduling, fills each task), so each star's min-side join is
-    * co-partitioned — no extra exchange. Lineage is truncated every
-    * round (reliable `checkpoint` when the session has a checkpoint dir
-    * — the cluster posture, survives executor loss — else
-    * `localCheckpoint`), keeping recovery DAGs bounded; superseded
-    * rounds' blocks are reclaimed by the ContextCleaner. */
+    * The rounds run as DataFrames — one loop at every graph size, kept
+    * because it is the shape that holds at 10^10 pairs: each star is a
+    * window aggregate behind one hash exchange, so no task ever builds a
+    * neighbor list in memory (a hub's group is buffered in WindowExec's
+    * spillable row array), Tungsten moves the edges as unsafe rows, and
+    * AQE re-plans each round's shuffle width as the edge set shrinks. At
+    * query scale a round costs mostly driver-side planning of a plan
+    * whose shape never changes. Lineage is truncated every round
+    * (reliable `checkpoint` when the session has a checkpoint dir — the
+    * cluster posture, survives executor loss — else `localCheckpoint`),
+    * keeping recovery DAGs bounded; superseded rounds' blocks are
+    * reclaimed by the ContextCleaner. */
   def connectedComponents(
       pairs: DataFrame,
       maxIter: Int = 50): DataFrame = connectedComponentsWithRounds(pairs, maxIter)._1
@@ -342,28 +328,21 @@ object Dedup {
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame,
       maxIter: Int = 50): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def truncatedDf(df: DataFrame): DataFrame = IterSupport.truncateDf(df, reliable)
+    val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
+    def truncated(df: DataFrame): DataFrame = IterSupport.truncateDf(df, reliable)
 
     // canonical undirected edges u < v; self-pairs and null ids dropped;
-    // checkpointed so BOTH engines start from materialized blocks and the
-    // engine-picking count below is not a wasted scan
-    val init = truncatedDf(pairs
+    // checkpointed so every round starts from materialized blocks
+    val init = truncated(pairs
       .filter(col("id_a").isNotNull && col("id_b").isNotNull && col("id_a") =!= col("id_b"))
       .select(least(col("id_a"), col("id_b")).cast("long").as("u"),
         greatest(col("id_a"), col("id_b")).cast("long").as("v"))
       .distinct())
-    // ONE job materializes the checkpoint, counts for engine dispatch, AND
-    // doubles as the Dataset loop's initial convergence checksum
-    val initSig = dfChecksum(init)
-    val edgeCount = initSig._1
-    val threshold = spark.conf.getOption("graft.cc.datasetThreshold")
-      .map(_.toLong).getOrElse(500000L)
+    // ONE job materializes the checkpoint AND gives the loop its initial
+    // convergence checksum
+    val initSig = checksum(init)
     val (edges, rounds) =
-      if (edgeCount == 0L) (init, 0)
-      else if (edgeCount <= threshold) ccRddLoop(init, edgeCount, maxIter, reliable)
-      else ccDatasetLoop(init, initSig, maxIter, truncatedDf)
+      if (initSig._1 == 0L) (init, 0) else starRounds(init, initSig, maxIter, truncated)
 
     // converged edges are min-rooted stars: children labelled by root,
     // plus one row per root labelling itself
@@ -373,131 +352,19 @@ object Dedup {
     (labels, rounds)
   }
 
-  /** The small-graph engine: star rounds on `RDD[(Long, Long)]`. The RDD
-    * closures compile once per JVM, so a round costs only its shuffles
-    * (~0.4 s at query scale vs ~2.5 s of per-round Catalyst replanning for
-    * the identically-shaped Dataset plan — it is also why GraphX iterates
-    * on RDDs). All shuffles share ONE HashPartitioner, so each star's
-    * min-side join is co-partitioned — no extra exchange. */
-  private def ccRddLoop(init: DataFrame, edgeCount: Long, maxIter: Int,
-      reliable: Boolean): (DataFrame, Int) = {
-    val spark = init.sparkSession
-    import spark.implicits._
-    val initRdd = init.as[(Long, Long)].rdd
-
-    // shuffle width from the MEASURED edge count + per-round lineage
-    // truncation — the rules shared with the LinkGraph loops, one
-    // definition in [[IterSupport]] (RDD tuple ops process ~0.5M
-    // rows/s/thread measured, so partitions are kept small enough that
-    // compute, not scheduling, fills each task)
-    val part = IterSupport.sharedPartitioner(spark, edgeCount, initRdd.getNumPartitions)
-    def truncated(e: org.apache.spark.rdd.RDD[(Long, Long)]) =
-      IterSupport.truncateRdd(e, reliable) // materializes in the checksum action
-
-    // large-star: every node attaches its STRICTLY LARGER neighbors to
-    // the minimum of its closed neighborhood. ONE shuffle (groupByKey of
-    // the neighbor multiset) + the emission narrow — the former
-    // reduceByKey-mins + partitionBy.join shape shuffled the same
-    // multiset PLUS a combined mins table and ran a third stage for the
-    // join; grouping is safe here because this engine only runs below
-    // `graft.cc.datasetThreshold` edges (≤500k), so a neighbor list is
-    // bounded by that. Emission is identical: m = min(closed nbhd),
-    // emit (m, v) per strictly-larger neighbor v.
-    //
-    // NO mid-round distinct: different groups can emit the same (m, v)
-    // pair (two low nodes sharing both the min and a larger neighbor),
-    // but small-star is duplicate-tolerant — duplicate `us` entries do
-    // not move a group min, and every emission passes through its
-    // trailing distinct, which is what defines the round's canonical
-    // output (and feeds the convergence checksum). Dropping the distinct
-    // removes one of the round's three shuffles outright (guide §2.4) at
-    // the cost of duplicate rows riding the small-star exchange — at most
-    // one per same-(min, neighbor) group pair, bounded by the edge count
-    // this engine caps at.
-    def largeStar(e: org.apache.spark.rdd.RDD[(Long, Long)]) = {
-      e.flatMap { case (u, v) => Iterator((u, v), (v, u)) }
-        .groupByKey(part)
-        .flatMap { case (u, vs) =>
-          var mn = u
-          val it0 = vs.iterator
-          while (it0.hasNext) { val v = it0.next(); if (v < mn) mn = v }
-          val m = mn
-          vs.iterator.collect { case v if v > u => (m, v) }
-        }
-    }
-
-    // small-star: every node attaches its smaller neighbors AND itself to
-    // the minimum of that set. Edges arrive canonical (u < v), so "bigger
-    // node's smaller neighbors" = key by v. Same one-shuffle groupByKey
-    // shape as largeStar.
-    def smallStar(e: org.apache.spark.rdd.RDD[(Long, Long)]) = {
-      e.map { case (u, v) => (v, u) }
-        .groupByKey(part)
-        .flatMap { case (v, us) =>
-          var mn = Long.MaxValue
-          val it0 = us.iterator
-          while (it0.hasNext) { val u = it0.next(); if (u < mn) mn = u }
-          val m = mn
-          us.iterator.collect { case u if u != m => (m, u) } ++ Iterator((m, v))
-        }
-        .distinct(part.numPartitions)
-    }
-
-    // multiset identity probe: count + order-independent hash sum (mix64
-    // pair hash; wrapping Long addition is commutative). Equal across a
-    // round ⇒ fixed point (collision odds ~2⁻⁶⁴, and the round bound
-    // below still backstops).
-    def checksum(e: org.apache.spark.rdd.RDD[(Long, Long)]): (Long, Long) =
-      e.map { case (u, v) =>
-        (1L, graft.imagecodec.ImageCodec.mix64(
-          u * 0x9E3779B97F4A7C15L ^ graft.imagecodec.ImageCodec.mix64(v)))
-      }.fold((0L, 0L)) { case ((c1, h1), (c2, h2)) => (c1 + c2, h1 + h2) }
-
-    // init is already materialized by the dispatcher's count; coalesce
-    // narrow if the loop width is below the input's
-    var edges = initRdd
-    if (part.numPartitions < edges.getNumPartitions)
-      edges = edges.coalesce(part.numPartitions) // narrow, no shuffle
-    var sig = checksum(edges)
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxIter) {
-      val next = truncated(smallStar(largeStar(edges)))
-      val nextSig = checksum(next)
-      converged = nextSig == sig
-      edges = next
-      sig = nextSig
-      rounds += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds — " +
-          "pair graph far beyond the O(log² n) bound; raise maxIter")
-    (edges.toDF("u", "v"), rounds)
-  }
-
-  /** The large-graph engine: the same star rounds as DataFrames. Tungsten
-    * hash aggregation + codegen move edges ~11× faster than the RDD loop's
-    * boxed-Tuple2, Java-serialized shuffles (measured at 1.2M edges: 2.6
-    * vs 30 s/round single-threaded), and the ~2 s/round driver-side
-    * Catalyst replanning that dominates small closures amortizes to
-    * nothing here. Per-round shuffle widths follow the session's
-    * shuffle-partition/AQE settings — the cluster posture at 10^10 pairs,
-    * where AQE also re-plans each round's width as the edge set shrinks. */
-  /** Multiset identity probe shared by the dispatcher and the Dataset
-    * loop: count + order-independent hash sum. The sum runs in
-    * DECIMAL(38,0): ANSI mode (Spark 4 default) throws on the long
+  /** Multiset identity probe: count + order-independent hash sum. The sum
+    * runs in DECIMAL(38,0): ANSI mode (Spark 4 default) throws on the long
     * overflow a sum of random 64-bit hashes is guaranteed to hit. */
-  private def dfChecksum(e: DataFrame): (Long, java.math.BigDecimal) = {
+  private def checksum(e: DataFrame): (Long, java.math.BigDecimal) = {
     val r = e.agg(count(lit(1)),
       coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
         lit(java.math.BigDecimal.ZERO))).head()
     (r.getLong(0), r.getDecimal(1))
   }
 
-  private def ccDatasetLoop(init: DataFrame,
+  private def starRounds(init: DataFrame,
       initSig: (Long, java.math.BigDecimal), maxIter: Int,
-      truncatedDf: DataFrame => DataFrame): (DataFrame, Int) = {
+      truncated: DataFrame => DataFrame): (DataFrame, Int) = {
     // Stars as WINDOW aggregates, not groupBy + join back: the join form
     // pays THREE exchanges per star (the agg's partial-row exchange, the
     // join side's full-row exchange — no reuse, the subtrees differ — and
@@ -521,8 +388,7 @@ object Dedup {
       // (measured: dropping this distinct and letting small-star's
       // duplicate-blind aggregates absorb the multiset is NEUTRAL at 1.2M
       // edges — the duplicate inflation through small-star costs what the
-      // saved exchange gains — so both engines keep the same
-      // canonical-multiset-per-star invariant)
+      // saved exchange gains — so every star emits a canonical multiset)
     }
     def smallStar(e: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("v"))
@@ -543,15 +409,12 @@ object Dedup {
     // edge set's shuffles into proportionally fewer tasks, which beats
     // the saved driver re-planning; keep the session setting)
     while (!converged && rounds < maxIter) {
-      val t0 = System.nanoTime
-      val next = truncatedDf(smallStar(largeStar(edges))) // materializes in dfChecksum()
-      val nextSig = dfChecksum(next)
+      val next = truncated(smallStar(largeStar(edges))) // materializes in checksum()
+      val nextSig = checksum(next)
       converged = nextSig == sig
       edges = next
       sig = nextSig
       rounds += 1
-      if (sys.env.get("GRAFT_CC_TRACE").contains("1"))
-        println(f"[cc] round $rounds: ${(System.nanoTime - t0) / 1e9}%.2f s, edges=${nextSig._1}")
     }
     if (!converged)
       throw new IllegalStateException(
@@ -579,10 +442,9 @@ object Dedup {
     * never a closure round. Depth-1 stars converge in a couple of
     * rounds unless the batch genuinely chains many old clusters.
     *
-    * Like [[connectedComponents]]' engine choice, the update SHAPE is
-    * dispatched per call on the labelling's measured size: a labelling
-    * below `graft.cc.touchedSplitThreshold` re-enters the closure whole
-    * (full-star) — at that size the split's bookkeeping jobs cost more
+    * The update SHAPE is dispatched per call on the labelling's measured
+    * size: a labelling below `graft.cc.touchedSplitThreshold` re-enters
+    * the closure whole (full-star) — at that size the split's bookkeeping jobs cost more
     * than the smaller closure saves (numbers at the dispatch site).
     *
     * Equivalence (asserted by `d13_cc_update`'s oracle and OpsSpec,
@@ -608,9 +470,9 @@ object Dedup {
       maxIter: Int = 50): DataFrame = {
     val spark = labels.sparkSession
     val pairs = newPairs.select(col("id_a"), col("id_b"))
-    // Like the closure's engine dispatch, the update SHAPE is picked per
-    // call from a measured size: below the threshold the whole (tiny)
-    // labelling re-enters the closure as star edges — the touched-split's
+    // The update SHAPE is picked per call from a measured size: below
+    // the threshold the whole (tiny) labelling re-enters the closure as
+    // star edges — the touched-split's
     // extra jobs (rep checkpoint, semi/anti scans, deeper final plan)
     // cost ~1 s that a small closure doesn't give back. The size probe is
     // limit(t+1).count(): CollectLimit reads only until t+1 rows exist,

@@ -1,33 +1,16 @@
 package graft.ops
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Iteration support shared by the engine's round-based graph operators
+/** Lineage truncation shared by the engine's round-based operators
   * ([[Dedup.connectedComponents]]'s star rounds, [[LinkGraph]]'s pointer
-  * doubling and PageRank): ONE definition of the shuffle-width rule and
-  * the lineage-truncation policy, so a tuning change cannot silently
-  * diverge the CC and link-graph loops (they are documented as sharing
-  * one dispatch rule). */
+  * doubling and PageRank, [[Bpe]]'s merge rounds): ONE definition of the
+  * checkpoint policy, so a change to it cannot silently diverge the
+  * loops. Each graph operator iterates as DataFrame rounds, truncated
+  * here so recovery DAGs stay bounded however many rounds run. */
 private[graft] object IterSupport {
-
-  /** Size an RDD iteration's shared partitioner from the MEASURED edge
-    * count (~50k edges/partition — small enough that compute, not
-    * scheduling, fills each task), not the input's partitioning: AQE
-    * coalesces a small distinct() to one partition and cannot re-plan
-    * across RDD rounds, and a toy edge set across the session's full
-    * shuffle width would pay stages × width empty-task scheduling per
-    * round. Conf: `graft.cc.edgesPerPartition`. */
-  def sharedPartitioner(spark: SparkSession, edgeCount: Long,
-      inputParts: Int): HashPartitioner = {
-    val edgesPerPartition = spark.conf.getOption("graft.cc.edgesPerPartition")
-      .map(_.toLong).getOrElse(50000L)
-    val ceiling = math.max(inputParts, spark.sparkContext.defaultParallelism)
-    new HashPartitioner(
-      math.max(1, math.min(ceiling, (edgeCount / edgesPerPartition + 1).toInt)))
-  }
 
   /** Truncate an RDD round's lineage: reliable `checkpoint` when the
     * session has a checkpoint dir (cluster posture — survives executor
@@ -44,8 +27,8 @@ private[graft] object IterSupport {
   }
 
   /** The DataFrame twin of [[truncateRdd]] (non-eager: execution rides
-    * the caller's next action — note plan COMPILATION still happens at
-    * call time, which is exactly why small loops run on RDDs). Persist
+    * the caller's next action — plan COMPILATION still happens at call
+    * time, so each truncation costs one driver-side plan compile). Persist
     * first on the reliable path for the same reason truncateRdd does: a
     * reliable checkpoint otherwise recomputes the lineage a second time
     * when it writes the checkpoint files, and with the default

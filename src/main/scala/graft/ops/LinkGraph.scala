@@ -1,56 +1,24 @@
 package graft.ops
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Link-graph operators over crawl edge sets — the graph half of a web
   * crawler that [[Dedup.connectedComponents]]' closure machinery doesn't
   * cover: DIRECTED single-successor resolution (HTTP redirect chains) and
   * fixed-iteration link-importance scoring (frontier prioritization).
   *
-  * Both follow the CC operator's measured engine-dispatch rule
-  * (`Dedup.connectedComponents` scaladoc): an iteration whose plan SHAPE
-  * never changes pays ~0.6–2 s of driver-side Catalyst re-analysis +
-  * whole-stage-codegen per round when written against Datasets, versus
-  * well under 0.1 s of execution at query scale — so below
-  * `graft.graph.datasetThreshold` (default 500k edges, the same measured
-  * crossover as `graft.cc.datasetThreshold`) the rounds run on
-  * `RDD[(Long, …)]` with ONE shared HashPartitioner (closures compile
-  * once per JVM; co-partitioned joins), and above it the identical
-  * rounds run as DataFrames, where Tungsten moves edges ~11× faster than
-  * boxed-Tuple2 shuffles and AQE re-plans each round's width — the
-  * 10^10-edge cluster posture.
+  * Each operator has one iteration loop, written as DataFrame rounds with
+  * per-round lineage truncation ([[IterSupport]]) — the same shape as the
+  * CC closure, kept for the same reason: it is the shape that holds at
+  * 10^10 edges. Every round is joins and aggregates behind hash
+  * exchanges, so per-task memory stays bounded by the partition rather
+  * than by a node's degree, Tungsten moves the edges as unsafe rows, and
+  * AQE re-plans each round's shuffle width as the working set shrinks.
+  * At query scale a round costs mostly driver-side planning of a plan
+  * whose shape never changes.
   */
 object LinkGraph {
-
-  // opt-in driver-side phase trace for the maintenance operators
-  // (GRAFT_GRAPH_TRACE=1): the g5 profile showed ~90% of the query is
-  // driver work, so the trace marks wall time at each build step
-  private val traceOn = sys.env.get("GRAFT_GRAPH_TRACE").contains("1")
-  private def trace(tag: String, t0: Long): Long = {
-    val now = System.nanoTime()
-    if (traceOn) println(f"[graph-trace] $tag%-28s +${(now - t0) / 1e9}%.3f s")
-    now
-  }
-
-  private def datasetThreshold(spark: SparkSession): Long =
-    spark.conf.getOption("graft.graph.datasetThreshold")
-      .map(_.toLong).getOrElse(500000L)
-
-  // shuffle-width rule + lineage truncation shared with the CC engine —
-  // one definition in [[IterSupport]]
-  private def sharedPartitioner(spark: SparkSession, edgeCount: Long,
-      inputParts: Int): HashPartitioner =
-    IterSupport.sharedPartitioner(spark, edgeCount, inputParts)
-
-  private def truncateRdd[T](rdd: RDD[T], reliable: Boolean): RDD[T] =
-    IterSupport.truncateRdd(rdd, reliable)
-
-  private def truncateDf(df: DataFrame, reliable: Boolean): DataFrame =
-    IterSupport.truncateDf(df, reliable)
 
   // -------------------------------------------------------------------
   // Redirect-chain resolution
@@ -103,21 +71,9 @@ object LinkGraph {
     * also refuse. */
   private def resolveWeighted(fnw: DataFrame, maxChain: Int): DataFrame = {
     require(maxChain >= 1, s"maxChain must be >= 1, got $maxChain")
-    val spark = fnw.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    val fn = truncateDf(fnw, reliable)
-    val edgeCount = fn.count() // materializes the checkpoint + dispatches
-    val rounds = ceilLog2(maxChain) + 1
-
-    val resolved =
-      if (edgeCount == 0L) {
-        fn.select(col("src"), col("dst").as("__cur"), col("w").as("__hops"),
-          lit(false).as("__settled"))
-      } else if (edgeCount <= datasetThreshold(spark)) {
-        redirectRddLoop(fn, edgeCount, rounds, reliable)
-      } else {
-        redirectDfLoop(fn, rounds, reliable)
-      }
+    val reliable = fnw.sparkSession.sparkContext.getCheckpointDir.isDefined
+    val fn = IterSupport.truncateDf(fnw, reliable) // materializes in round 1's count
+    val resolved = redirectRounds(fn, ceilLog2(maxChain) + 1, reliable)
 
     resolved.select(
       col("src"),
@@ -215,42 +171,12 @@ object LinkGraph {
   private def ceilLog2(n: Int): Int =
     64 - java.lang.Long.numberOfLeadingZeros(math.max(1, n.toLong - 1))
 
-  /** Small-graph engine: state (src → cur, hops, settled) keyed by src on
-    * the shared partitioner. Per round the unsettled rows re-key by cur
-    * (the one shuffle) and left-join the full state: a miss means cur has
-    * no out-edge — the chain terminal; a hit composes the jump, doubling
-    * covered distance. Settled rows rejoin by union (partitioner-aware —
-    * both sides co-partitioned). */
-  private def redirectRddLoop(fn: DataFrame, edgeCount: Long, rounds: Int,
-      reliable: Boolean): DataFrame = {
-    val spark = fn.sparkSession
-    import spark.implicits._
-    val part = sharedPartitioner(spark, edgeCount, fn.rdd.getNumPartitions)
-
-    var state: RDD[(Long, (Long, Long, Boolean))] = fn.as[(Long, Long, Long)].rdd
-      .map { case (s, d, w) => (s, (d, w, false)) }
-      .partitionBy(part)
-    var unsettled = edgeCount
-    var r = 0
-    while (unsettled > 0 && r < rounds) {
-      val settledRows = state.filter(_._2._3)
-      val byCur = state.filter(!_._2._3)
-        .map { case (s, (c, h, _)) => (c, (s, h)) }
-      val stepped = byCur.leftOuterJoin(state, part).map {
-        case (cur, ((s, h), None))              => (s, (cur, h, true))
-        case (_, ((s, h), Some((bc, bh, bs))))  => (s, (bc, h + bh, bs))
-      }.partitionBy(part)
-      state = truncateRdd(settledRows.union(stepped), reliable)
-      unsettled = state.filter(!_._2._3).count()
-      r += 1
-    }
-    state.map { case (s, (c, h, st)) => (s, c, h, st) }
-      .toDF("src", "__cur", "__hops", "__settled")
-  }
-
-  /** Large-graph engine: the identical rounds as DataFrames (Tungsten +
-    * AQE width re-planning per round — see the object scaladoc). */
-  private def redirectDfLoop(fn: DataFrame, rounds: Int,
+  /** The pointer-doubling rounds: state (src → cur, hops, settled). Per
+    * round the unsettled rows left-join the full state on cur (one
+    * shuffle of the still-unsettled rows): a miss means cur has no
+    * out-edge — the chain terminal; a hit composes the jump, doubling the
+    * covered distance. Settled rows rejoin by union. */
+  private def redirectRounds(fn: DataFrame, rounds: Int,
       reliable: Boolean): DataFrame = {
     var state = fn.select(col("src"), col("dst").as("__cur"),
       col("w").as("__hops"), lit(false).as("__settled"))
@@ -267,7 +193,8 @@ object LinkGraph {
             .otherwise(u("__hops") + col("__bhops")).as("__hops"),
           when(col("__bsrc").isNull, lit(true))
             .otherwise(col("__bsettled")).as("__settled"))
-      state = truncateDf(state.filter(col("__settled")).unionByName(stepped), reliable)
+      state = IterSupport.truncateDf(
+        state.filter(col("__settled")).unionByName(stepped), reliable)
       unsettled = state.filter(!col("__settled")).count() // materializes
       r += 1
     }
@@ -295,11 +222,10 @@ object LinkGraph {
     * RELATIVE priorities. Iterations are a fixed small constant — a
     * frontier scorer needs rank separation, not convergence — so total
     * work is `iterations` passes over the edge set: per iteration ONE
-    * shuffle (the contribution reduceByKey / groupBy); the rank-side
-    * joins are co-partitioned on the shared partitioner (RDD engine) or
-    * planned by AQE (DataFrame engine). Overflow headroom: ranks are
-    * bounded by total mass ≤ nodes·scale; num·Σ stays under 2⁶³ through
-    * 10^10 nodes at the default scale 10⁶.
+    * shuffle (the contribution groupBy); the rank-side joins are planned
+    * by AQE. Overflow headroom: ranks are bounded by total mass ≤
+    * nodes·scale; num·Σ stays under 2⁶³ through 10^10 nodes at the
+    * default scale 10⁶.
     *
     * Input: (src, dst) long edges (dups/nulls dropped). Output:
     * (node, rank_fp) — every node incident to an edge, rank in units of
@@ -307,21 +233,38 @@ object LinkGraph {
   def pagerank(edges: DataFrame, iterations: Int = 3, scale: Long = 1000000L,
       dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
     require(iterations >= 1 && dampDen > 0 && dampNum >= 0 && dampNum <= dampDen)
-    val spark = edges.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
+    val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
     val base = (dampDen - dampNum) * scale / dampDen
-
-    val e = truncateDf(edges
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .distinct(), reliable)
-    val edgeCount = e.count() // materializes + dispatches
-    if (edgeCount == 0L) return e.select(col("src").as("node"), col("dst").as("rank_fp"))
-
-    if (edgeCount <= datasetThreshold(spark))
-      pagerankRddLoop(e, edgeCount, iterations, scale, dampNum, dampDen, base, reliable)
-    else
-      pagerankDfLoop(e, iterations, scale, dampNum, dampDen, base, reliable)
+    val e = IterSupport.truncateDf(prepEdges(edges), reliable)
+    val deg = e.groupBy("src").agg(count(lit(1)).as("__outdeg"))
+    val adj = IterSupport.truncateDf(e.join(deg, "src"), reliable)
+    val nodes = IterSupport.truncateDf(
+      e.select(col("src").as("node")).unionByName(e.select(col("dst").as("node")))
+        .distinct(), reliable)
+    var ranks = nodes.select(col("node"), lit(scale).as("rank_fp"))
+    var i = 0
+    while (i < iterations) {
+      // NOTE: stays the groupBy + left-join form, NOT pagerankHistory's
+      // union+agg — here `ranks` is only truncated every 5 rounds, so a
+      // union with `nodes` would put the same relation in live lineage
+      // twice and break attribute binding at execution (measured at the
+      // 2M-edge bench: "key not found: node#…"); the history loop can use
+      // union+agg precisely because it checkpoints every level.
+      val contribs = adj.join(ranks, adj("src") === ranks("node"))
+        // integral division: `DIV`, not `/` (float) — exactness is the contract
+        .select(adj("dst").as("node"), expr("rank_fp div __outdeg").as("__c"))
+        .groupBy("node").agg(sum(col("__c")).as("__c"))
+      ranks = nodes.join(contribs, Seq("node"), "left")
+        .select(col("node"),
+          (lit(base) + expr(s"($dampNum * coalesce(__c, 0L)) div $dampDen"))
+            .as("rank_fp"))
+      if ((i + 1) % 5 == 0) {
+        ranks = IterSupport.truncateDf(ranks, reliable)
+        ranks.count() // materialize the truncation point
+      }
+      i += 1
+    }
+    ranks
   }
 
   /** Normalized long (src, dst) edges, nulls dropped, deduped — the shared
@@ -345,12 +288,9 @@ object LinkGraph {
     * that makes incremental maintenance possible: [[updatePagerank]]
     * merges the batch against the stored deg/nodes in O(batch + stored
     * scans) and re-walks only the dirty frontier against the stored rank
-    * levels. Always the DataFrame engine: history is a MAINTENANCE
-    * artifact — it exists for the 10^10-edge stored-graph posture, where
-    * the DF loop is the dispatch target anyway. Everything is LAZY
-    * (non-eager checkpoints): the caller's first action materializes the
-    * whole chain once; each level's blocks are then served from the
-    * checkpoint on every later read. */
+    * levels. Everything is LAZY (non-eager checkpoints): the caller's
+    * first action materializes the whole chain once; each level's blocks
+    * are then served from the checkpoint on every later read. */
   def pagerankHistory(edges: DataFrame, iterations: Int = 3,
       scale: Long = 1000000L, dampNum: Long = 85,
       dampDen: Long = 100): PagerankState = {
@@ -358,9 +298,7 @@ object LinkGraph {
     val spark = edges.sparkSession
     val reliable = spark.sparkContext.getCheckpointDir.isDefined
     val base = (dampDen - dampNum) * scale / dampDen
-    var t = System.nanoTime()
-    val e = truncateDf(prepEdges(edges), reliable)
-    t = trace("hist: e truncate", t)
+    val e = IterSupport.truncateDf(prepEdges(edges), reliable)
     // deg and nodes both derive from the e checkpoint and are INDEPENDENT
     // of each other, yet each truncation executes its shuffle stages at
     // call time (AQE materializes a plan's exchanges inside toRdd), so
@@ -372,14 +310,13 @@ object LinkGraph {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val fDeg = Future(truncateDf(
+      val fDeg = Future(IterSupport.truncateDf(
         e.groupBy("src").agg(count(lit(1)).as("__outdeg")), reliable))
-      val fNodes = Future(truncateDf(
+      val fNodes = Future(IterSupport.truncateDf(
         e.select(col("src").as("node")).unionByName(e.select(col("dst").as("node")))
           .distinct(), reliable))
       (Await.result(fDeg, Duration.Inf), Await.result(fNodes, Duration.Inf))
     }
-    t = trace("hist: deg+nodes truncate", t)
     // NOT truncated: each level re-runs this join of two checkpointed
     // frames (cheap, co-read), while truncating it would MATERIALIZE a
     // corpus-sized (src, dst, outdeg) table to block storage per fold —
@@ -398,13 +335,12 @@ object LinkGraph {
       // exchange and no join stage, at every scale
       val contribs = adj.join(ranks, adj("src") === ranks("node"))
         .select(adj("dst").as("node"), expr("rank_fp div __outdeg").as("__c"))
-      ranks = truncateDf(contribs
+      ranks = IterSupport.truncateDf(contribs
         .unionByName(nodes.select(col("node"), lit(0L).as("__c")))
         .groupBy("node").agg(sum(col("__c")).as("__c"))
         .select(col("node"),
           (lit(base) + expr(s"($dampNum * __c) div $dampDen")).as("rank_fp")),
         reliable)
-      t = trace(s"hist: rank level ${i + 1}", t)
       hist += ranks
       i += 1
     }
@@ -465,14 +401,11 @@ object LinkGraph {
     // batch-sized work both times — while a second checkpoint would add a
     // full driver-side plan compile (~0.3 s, the measured dominant cost of
     // this operator at query scale; see the expansion-loop note below)
-    var t = System.nanoTime()
     val prepNe = prepEdges(newEdges)
     val storedDup = oldE.join(broadcast(prepNe), Seq("src", "dst"), "left_semi")
-    val ne = truncateDf(prepNe
+    val ne = IterSupport.truncateDf(prepNe
       .join(broadcast(storedDup), Seq("src", "dst"), "left_anti"), reliable)
-    t = trace("ne truncate (compile)", t)
     if (ne.limit(1).count() == 0L) return history.last
-    t = trace("ne probe (job)", t)
 
     val full = oldE.unionByName(ne) // disjoint by the anti join
     // deg' = stored deg + per-src batch deltas (broadcast merge + the
@@ -494,20 +427,8 @@ object LinkGraph {
     val neNodes = ne.select(col("src").as("node"))
       .unionByName(ne.select(col("dst").as("node"))).distinct()
     val nodeDup = state.nodes.join(broadcast(neNodes), Seq("node"), "left_semi")
-    // TRUNCATED (non-eager), unlike batchDeg above: newNodes is stitched
-    // into the dirty-expansion tree at EVERY level and batchSrcs at every
-    // level's srcDirty — leaving them as join trees made the final
-    // frontier's one truncation compile a plan whose size grows
-    // multiplicatively with the level count (measured 4.4 s of driver
-    // planning+codegen at query scale, the single largest cost of this
-    // operator). As checkpoint leaves the expansion tree is ~6 operators
-    // per level and the same compile is ~0.5 s; the two extra toRdd
-    // compiles here are over batch-sized plans (~0.2 s together), and no
-    // extra job runs — both frames first materialize inside the fold's
-    // existing broadcast builds.
     val newNodes = neNodes.join(broadcast(nodeDup), Seq("node"), "left_anti")
     val batchSrcs = ne.select(col("src")).distinct()
-    t = trace("deg/nodes build", t)
 
     // Broadcast-small assumption (documented contract, like
     // updateRedirects' append-only rule): the batch and its ≤ |batch| ×
@@ -553,10 +474,8 @@ object LinkGraph {
       val next = full.join(broadcast(srcDirty), Seq("src"), "left_semi")
         .select(col("dst").as("node"))
         .unionByName(newNodes)
-      t = trace(s"dirty level $i lazy build", t)
-      dirty = if (i == history.length - 1) truncateDf(next.distinct(), reliable)
+      dirty = if (i == history.length - 1) IterSupport.truncateDf(next.distinct(), reliable)
         else next
-      t = trace(s"dirty level $i truncate", t)
       i += 1
     }
     // in-edges of the final dirty set — ONE probe a dst-partitioned edge
@@ -564,12 +483,10 @@ object LinkGraph {
     // the per-level pruned history follow from it, all outside the loop
     // (the identical broadcast subtrees below then build once per
     // execution via exchange reuse instead of once per round)
-    val inE = truncateDf(
+    val inE = IterSupport.truncateDf(
       full.join(broadcast(dirty.select(col("node").as("dst"))),
         Seq("dst"), "left_semi"), reliable)
-    t = trace("inE truncate (compile)", t)
-    val touched = truncateDf(inE.select(col("src")).distinct(), reliable)
-    t = trace("touched truncate (compile)", t)
+    val touched = IterSupport.truncateDf(inE.select(col("src")).distinct(), reliable)
     val degT = deg.join(broadcast(touched), Seq("src"), "left_semi")
     var recomputed = dirty.select(col("node"), lit(scale).as("rank_fp"))
     i = 1
@@ -596,81 +513,9 @@ object LinkGraph {
         .select(col("node"),
           (lit(base) + expr(s"($dampNum * coalesce(__c, 0L)) div $dampDen"))
             .as("rank_fp"))
-      t = trace(s"recompute round $i build", t)
       i += 1
     }
-    val out = history.last.join(broadcast(dirty), Seq("node"), "left_anti")
+    history.last.join(broadcast(dirty), Seq("node"), "left_anti")
       .unionByName(recomputed)
-    trace("final union build", t)
-    out
-  }
-
-  private def pagerankRddLoop(e: DataFrame, edgeCount: Long, iterations: Int,
-      scale: Long, dampNum: Long, dampDen: Long, base: Long,
-      reliable: Boolean): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val part = sharedPartitioner(spark, edgeCount, e.rdd.getNumPartitions)
-
-    val edgesRdd = e.as[(Long, Long)].rdd
-    // adjacency with out-degree and the node set, keyed on the shared
-    // partitioner. NOT persisted: both are SHUFFLED RDDs referenced by
-    // every iteration's lineage, so within one job their map stages run
-    // once and each round reads the shuffle output (stage sharing), and
-    // later actions skip the completed shuffle stages entirely — explicit
-    // caching would only duplicate the shuffle files into block storage.
-    val deg = edgesRdd.map { case (s, _) => (s, 1L) }.reduceByKey(part, _ + _)
-    val adj = edgesRdd.map { case (s, d) => (s, d) }.partitionBy(part).join(deg)
-    val nodes = edgesRdd.flatMap { case (s, d) => Iterator(s, d) }
-      .map((_, ())).reduceByKey(part, (a, _) => a)
-
-    var ranks: RDD[(Long, Long)] = nodes.mapValues(_ => scale) // keeps partitioner
-    var i = 0
-    while (i < iterations) {
-      val contribs = adj.join(ranks, part)
-        .map { case (_, ((d, dg), r)) => (d, r / dg) }
-        .reduceByKey(part, _ + _)
-      ranks = nodes.leftOuterJoin(contribs, part).mapValues {
-        case (_, c) => base + dampNum * c.getOrElse(0L) / dampDen
-      }
-      // fixed small iteration count ⇒ shallow lineage; truncate anyway
-      // every few rounds so a large `iterations` stays recovery-bounded
-      if ((i + 1) % 5 == 0) ranks = truncateRdd(ranks, reliable)
-      i += 1
-    }
-    ranks.toDF("node", "rank_fp")
-  }
-
-  private def pagerankDfLoop(e: DataFrame, iterations: Int, scale: Long,
-      dampNum: Long, dampDen: Long, base: Long, reliable: Boolean): DataFrame = {
-    val deg = e.groupBy("src").agg(count(lit(1)).as("__outdeg"))
-    val adj = truncateDf(e.join(deg, "src"), reliable)
-    val nodes = truncateDf(
-      e.select(col("src").as("node")).unionByName(e.select(col("dst").as("node")))
-        .distinct(), reliable)
-    var ranks = nodes.select(col("node"), lit(scale).as("rank_fp"))
-    var i = 0
-    while (i < iterations) {
-      // NOTE: stays the groupBy + left-join form, NOT pagerankHistory's
-      // union+agg — here `ranks` is only truncated every 5 rounds, so a
-      // union with `nodes` would put the same relation in live lineage
-      // twice and break attribute binding at execution (measured at the
-      // 2M-edge bench: "key not found: node#…"); the history loop can use
-      // union+agg precisely because it checkpoints every level.
-      val contribs = adj.join(ranks, adj("src") === ranks("node"))
-        // integral division: `DIV`, not `/` (float) — exactness is the contract
-        .select(adj("dst").as("node"), expr("rank_fp div __outdeg").as("__c"))
-        .groupBy("node").agg(sum(col("__c")).as("__c"))
-      ranks = nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr(s"($dampNum * coalesce(__c, 0L)) div $dampDen"))
-            .as("rank_fp"))
-      if ((i + 1) % 5 == 0) {
-        ranks = truncateDf(ranks, reliable)
-        ranks.count() // materialize the truncation point
-      }
-      i += 1
-    }
-    ranks
   }
 }

@@ -7,8 +7,8 @@ import graft.ops.LinkGraph
 
 /** Semantic tests for the link-graph operators: redirect resolution must
   * agree with a driver-side sequential walker (incl. cycles, merges,
-  * self-loops, over-cap chains), PageRank with an exact integer reference,
-  * and the RDD / DataFrame engines must be row-identical. */
+  * self-loops, over-cap chains), PageRank with an exact integer
+  * reference, and each incremental update with its one-shot twin. */
 class LinkGraphSpec extends SparkSpec {
 
   private def edgesDf(e: Seq[(Long, Long)]): DataFrame = {
@@ -37,11 +37,6 @@ class LinkGraphSpec extends SparkSpec {
           if (r.isNullAt(2)) None else Some(r.getLong(2)),
           r.getBoolean(3)))
     }.toMap
-
-  private def withDfEngine[T](body: => T): T = {
-    spark.conf.set("graft.graph.datasetThreshold", "0")
-    try body finally spark.conf.unset("graft.graph.datasetThreshold")
-  }
 
   private val handGraph = Seq(
     1L -> 2L, 2L -> 3L, 3L -> 4L, // chain to terminal 4
@@ -77,7 +72,7 @@ class LinkGraphSpec extends SparkSpec {
     assert(got(5L) === ((None, None, true)), "hops > maxChain must be unresolved")
   }
 
-  test("resolveRedirects: random functional graphs match the sequential walker, both engines") {
+  test("resolveRedirects: random functional graphs match the sequential walker") {
     for (seed <- Seq(7L, 23L, 91L)) {
       val n = 120
       val edges = (0 until n).flatMap { i =>
@@ -89,11 +84,8 @@ class LinkGraphSpec extends SparkSpec {
       }
       val fnMap = edges.groupBy(_._1).map { case (s, es) => s -> es.map(_._2).min }
       val expected = walkRef(fnMap, 16)
-      val rdd = collectResolved(LinkGraph.resolveRedirects(edgesDf(edges), maxChain = 16))
-      val df = withDfEngine(
-        collectResolved(LinkGraph.resolveRedirects(edgesDf(edges), maxChain = 16)))
-      assert(rdd === expected, s"RDD engine diverged from walker at seed $seed")
-      assert(df === expected, s"DataFrame engine diverged from walker at seed $seed")
+      val got = collectResolved(LinkGraph.resolveRedirects(edgesDf(edges), maxChain = 16))
+      assert(got === expected, s"diverged from walker at seed $seed")
     }
   }
 
@@ -142,7 +134,7 @@ class LinkGraphSpec extends SparkSpec {
     assert(ex.getMessage.contains("append-only"))
   }
 
-  test("updateRedirects: random edge splits equal one-shot resolution, both engines") {
+  test("updateRedirects: random edge splits equal one-shot resolution") {
     for (seed <- Seq(11L, 47L)) {
       val n = 150
       val edges = (0 until n).flatMap { i =>
@@ -155,13 +147,14 @@ class LinkGraphSpec extends SparkSpec {
       val (b1, b2) = edges.partition { case (s, d) =>
         graft.imagecodec.ImageCodec.mix64(s * 31L + d) % 2 == 0
       }
-      def run() = collectResolved(LinkGraph.updateRedirects(
+      val got = collectResolved(LinkGraph.updateRedirects(
         LinkGraph.resolveRedirects(edgesDf(b1), maxChain = 16),
         edgesDf(b2), maxChain = 16))
       val full = collectResolved(
         LinkGraph.resolveRedirects(edgesDf(edges), maxChain = 16))
-      assert(run() === full, s"RDD engine diverged at seed $seed")
-      assert(withDfEngine(run()) === full, s"DataFrame engine diverged at seed $seed")
+      // the one-shot side is itself pinned to the sequential walker
+      assert(full === walkRef(edges.toMap, 16), s"one-shot diverged from walker at seed $seed")
+      assert(got === full, s"update diverged at seed $seed")
     }
   }
 
@@ -182,26 +175,26 @@ class LinkGraphSpec extends SparkSpec {
     r
   }
 
-  test("pagerank: exact integer agreement with the reference, both engines") {
+  test("pagerank: exact integer agreement with the reference") {
     // hub-and-chain with a dangling sink (2 has no out-edges) and a
     // multi-in-degree hub (0)
     val edges = Seq(0L -> 1L, 0L -> 2L, 1L -> 0L, 1L -> 2L, 3L -> 0L, 4L -> 0L, 4L -> 3L)
     val expected = pagerankRef(edges, iters = 4)
-    def run() = LinkGraph.pagerank(edgesDf(edges), iterations = 4)
+    val got = LinkGraph.pagerank(edgesDf(edges), iterations = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(run() === expected, "RDD engine")
-    assert(withDfEngine(run()) === expected, "DataFrame engine")
+    assert(got === expected)
     // ranks moved off the uniform start and the hub outranks the leaves
     assert(expected(0L) > expected(4L))
   }
 
-  test("pagerank: engines agree on the sf0.001 fixture link graph") {
+  test("pagerank: sf0.001 fixture link graph matches the reference") {
     val edges = graft.queries.Fixture.linkEdges(spark, "/root/testdata/sf0.001")
-    def key(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val rdd = key(LinkGraph.pagerank(edges, iterations = 3))
-    val df = withDfEngine(key(LinkGraph.pagerank(edges, iterations = 3)))
-    assert(rdd === df)
-    assert(rdd.nonEmpty)
+    val local = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    val got = ranksOf(LinkGraph.pagerank(edges, iterations = 3))
+    assert(got.nonEmpty)
+    assert(got === pagerankRef(local, iters = 3))
   }
 
   private def ranksOf(df: DataFrame): Map[Long, Long] =

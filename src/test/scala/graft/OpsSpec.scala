@@ -390,6 +390,23 @@ class OpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
+  /** Min-rooted union-find reference for [[Dedup.connectedComponents]]:
+    * every endpoint of a non-self pair, labelled with its component's min
+    * (parent(max root) = min root keeps every root its component's min). */
+  private def unionFindRef(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    val real = pairs.filter { case (a, b) => a != b }
+    real.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    real.flatMap { case (a, b) => Seq(a, b) }.distinct.map(n => n -> find(n)).toMap
+  }
+
   test("connected components: A~B, B~C collapse transitively even though A≁C") {
     // the pair set a banded LSH emits when A,C never share a bucket
     val got = components(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
@@ -417,20 +434,29 @@ class OpsSpec extends SparkSpec {
     assert(got.size == 200 && got.values.forall(_ == 0L))
   }
 
-  test("connected components: Dataset engine (forced via threshold) ≡ RDD engine") {
-    // the hybrid picks the engine by measured edge count; forcing the
-    // Dataset loop onto a toy graph pins cross-engine label equality
-    // (the probe pinned it at 1.2M edges: identical labelled counts)
-    import spark.implicits._
+  test("connected components: mixed graph matches hand labels and union-find") {
+    // two bridged stars, a 3-chain and a lone pair in one pair set
     val pairs = Seq((5L, 1L), (5L, 2L), (9L, 7L), (9L, 8L), (2L, 7L),
       (30L, 31L), (31L, 32L), (40L, 41L))
-    val viaRdd = components(pairs)
-    spark.conf.set("graft.cc.datasetThreshold", "0")
-    try {
-      val viaDs = components(pairs)
-      assert(viaDs == viaRdd)
-      assert(viaDs(8L) == 1L && viaDs(32L) == 30L && viaDs(41L) == 40L)
-    } finally spark.conf.unset("graft.cc.datasetThreshold")
+    val got = components(pairs)
+    assert(got == Map(1L -> 1L, 2L -> 1L, 5L -> 1L, 7L -> 1L, 8L -> 1L, 9L -> 1L,
+      30L -> 30L, 31L -> 30L, 32L -> 30L, 40L -> 40L, 41L -> 40L))
+    assert(got == unionFindRef(pairs))
+  }
+
+  test("connected components: 5k-neighbour hub plus a long chain matches union-find") {
+    // the hub's star is one window group of 5000 rows in every round; the
+    // chain (diameter 300) joins the hub's component through a leaf, and
+    // a second chain stays a separate component
+    val hub = 3000L
+    val spokes = ((0L until hub) ++ ((hub + 1) to 5000L)).map(n => (hub, n))
+    val joined = (6000L until 6300L).map(i => (i, i + 1)) :+ ((6300L, 4999L))
+    val apart = (7000L until 7100L).map(i => (i + 1, i))
+    val pairs = spokes ++ joined ++ apart
+    val got = components(pairs)
+    assert(got == unionFindRef(pairs))
+    assert(got.size == 5001 + 301 + 101)
+    assert(got.values.toSet == Set(0L, 7000L))
   }
 
   test("collapseNearDups keeps one survivor per cluster and every untouched row") {
@@ -591,20 +617,7 @@ class OpsSpec extends SparkSpec {
     val genEdges = Gen.listOfN(25, Gen.zip(Gen.choose(0L, 30L), Gen.choose(0L, 30L)))
     val genCut = Gen.choose(0, 25)
     val prop = Prop.forAll(genEdges, genCut) { (edges: List[(Long, Long)], cut: Int) =>
-      // min-rooted union-find reference: parent(max root) = min root keeps
-      // every root the minimum of its component
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      val real = edges.filter { case (a, b) => a != b }
-      real.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val want = real.flatMap { case (a, b) => Seq(a, b) }.distinct
-        .map(n => n -> find(n)).toMap
+      val want = unionFindRef(edges)
       val full = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val (p1, p2) = edges.splitAt(math.min(cut, edges.length))
