@@ -5,8 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Extra (non-driver-contract) benchmark harness for optimization work —
   * guide §1: isolate the computation with a per-job breakdown so the fix
-  * targets where the time actually goes, and time transformations with
-  * the noop sink where a count() would let Catalyst prune the work.
+  * targets where the time actually goes.
   *
   * Usage:
   *   SPARK_GRAFT_ONLY=g5_pagerank_update sbt "runMain graft.BenchExtra"
@@ -52,94 +51,6 @@ object BenchExtra {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // phase decomposition for the g5 shape: edges → history → update
-    if (sys.env.get("SPARK_GRAFT_G5_PHASES").contains("1")) {
-      import org.apache.spark.sql.functions._
-      for (pass <- 1 to 2) {
-        val edges = queries.Fixture.linkEdges(spark, sfDir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val tE = timeIt(edges.count())
-        val b1 = edges.filter(xxhash64(col("src"), col("dst")) % 3 =!= 0)
-        val b2 = edges.filter(xxhash64(col("src"), col("dst")) % 3 === 0)
-        var state: graft.ops.LinkGraph.PagerankState = null
-        val tH = timeIt { state = graft.ops.LinkGraph.pagerankHistory(b1, iterations = 3) }
-        val tHM = timeIt(state.history.last.count())
-        var upd: org.apache.spark.sql.DataFrame = null
-        val tUB = timeIt { upd = graft.ops.LinkGraph.updatePagerank(state, b2) }
-        val tU = timeIt(upd.count())
-        edges.unpersist()
-        println(f"[g5-phases pass$pass] edges=$tE%.2f historyBuild=$tH%.2f " +
-          f"historyMat=$tHM%.2f updateBuild=$tUB%.2f updateExec=$tU%.2f")
-      }
-      spark.stop()
-      return
-    }
-
-    // phase decomposition for the CC family: pair derivation vs closure
-    if (sys.env.get("SPARK_GRAFT_CC_PHASES").contains("1")) {
-      import org.apache.spark.sql.functions._
-      val md5h = (t: org.apache.spark.sql.Column) => graft.ops.CrossHash.md5Hash60(t)
-      for (pass <- 1 to 2) {
-        val docs = queries.Fixture.documents(spark, sfDir)
-        val lsh = graft.ops.Dedup.minhashLshCandidates(docs, "text", "doc_id")
-        val mh = graft.ops.Dedup.jaccardVerify(docs, lsh.select("id_a", "id_b"), "text", "doc_id")
-          .filter(col("jaccard_den") > 0 && col("jaccard_num") * 5 >= col("jaccard_den") * 4)
-          .select("id_a", "id_b")
-        val sh = graft.ops.Dedup.simhashCandidates(docs, "text", "doc_id",
-            maxHamming = 6, numBands = 8, bits = 60, tokenHash = md5h)
-          .select("id_a", "id_b")
-        val pairs = mh.unionByName(sh)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val tP = timeIt(pairs.count())
-        var rounds = 0
-        var cc: org.apache.spark.sql.DataFrame = null
-        val tC = timeIt {
-          val r = graft.ops.Dedup.connectedComponentsWithRounds(pairs)
-          cc = r._1; rounds = r._2
-        }
-        val tM = timeIt(cc.count())
-        pairs.unpersist()
-        println(f"[cc-phases pass$pass] pairs=$tP%.2f closure=$tC%.2f " +
-          f"labelsMat=$tM%.2f rounds=$rounds")
-      }
-      spark.stop()
-      return
-    }
-
-    // phase decomposition for e3: empty write / ingest / label fold
-    if (sys.env.get("SPARK_GRAFT_E3_PHASES").contains("1")) {
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      val md5h = (t: org.apache.spark.sql.Column) => graft.ops.CrossHash.md5Hash60(t)
-      for (pass <- 1 to 2) {
-        val path = s"/tmp/graft-store/e3phases_pid${ProcessHandle.current().pid()}_$pass"
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val docs = queries.Fixture.documents(spark, sfDir)
-        val sigsAll = docs.select(col("doc_id"),
-          graft.ops.Dedup.simhashFromHashes(
-            transform(split(lower(trim(col("text"))), "\\s+"), t => md5h(t)), 60).as("sig"))
-          .persist(lvl)
-        val tSig = timeIt(sigsAll.count())
-        val tW0 = timeIt(graft.ops.BandStore.write(sigsAll.limit(0), "doc_id", "sig", path,
-          numBands = 8, bits = 60, prefixBits = 2))
-        var labels = Seq.empty[(Long, Long)].toDF("doc_id", "component_rep")
-        for (k <- 0 until 2) {
-          var pairs: org.apache.spark.sql.DataFrame = null
-          val tI = timeIt { pairs = graft.ops.BandStore.ingest(
-            sigsAll.filter(col("doc_id") % 2 === k), "doc_id", "sig", path, maxHamming = 6) }
-          val tU = timeIt { labels = graft.ops.Dedup.updateComponents(labels, pairs) }
-          pairs.unpersist()
-          println(f"[e3-phases pass$pass] k=$k ingest=$tI%.2f update=$tU%.2f" +
-            (if (k == 0) f" sig=$tSig%.2f w0=$tW0%.2f" else ""))
-        }
-        val tM = timeIt(labels.count())
-        sigsAll.unpersist()
-        println(f"[e3-phases pass$pass] labelsMat=$tM%.2f")
-      }
-      spark.stop()
-      return
-    }
 
     val names = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)

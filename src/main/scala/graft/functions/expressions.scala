@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, BinaryExpression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.graftbridge.Bridge
@@ -722,4 +723,19 @@ case class RobotsVerdictExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): RobotsVerdictExpr =
     copy(left = newLeft, right = newRight)
   override def prettyName: String = "robots_verdict"
+}
+
+/** range_bucket(key): the bucket of a row's sort-key struct under FIXED
+  * range bounds — a [[org.apache.spark.RangePartitioner]] sampled once on
+  * that same key (see `Scheduler.orderBuckets`). A pure function of the
+  * row, so every plan branch that evaluates it puts a row in the same
+  * bucket, whichever exchange or cache feeds that branch. */
+case class RangeBucketExpr(child: Expression,
+    bounds: org.apache.spark.RangePartitioner[InternalRow, Null])
+    extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = IntegerType
+  override def nullSafeEval(key: Any): Any = bounds.getPartition(key)
+  override protected def withNewChildInternal(newChild: Expression): RangeBucketExpr =
+    copy(child = newChild)
+  override def prettyName: String = "range_bucket"
 }

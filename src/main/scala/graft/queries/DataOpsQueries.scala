@@ -1271,7 +1271,7 @@ object DataOpsQueries {
     // ~2000-token output shards, docs never split): shard = exclusive
     // prefix sum of token counts in doc_id order DIV budget, computed by
     // the DISTRIBUTED two-pass prefix sum (Scheduler.globalPrefixSum —
-    // range partition, in-range running sums, #partitions-row offset
+    // sampled range buckets, in-bucket running sums, #buckets-row offset
     // table broadcast back). The naive `sum over (order by doc_id)`
     // window moves the entire corpus through ONE task; this shape is the
     // same answer bit-identically with the corpus staying spread
@@ -1578,8 +1578,9 @@ object DataOpsQueries {
     // Deterministic epoch shuffle — the training-order step: a seeded
     // cross-engine hash of (doc_id, epoch) defines a full permutation of
     // the corpus, ranked WITHOUT the single-task global window
-    // (Scheduler.globalRank's two-pass shape), then dealt round-robin
-    // into 16 balanced shards. Re-running the same epoch is bit-stable
+    // (Scheduler.globalRank: sampled range buckets + prefix-sum offsets,
+    // one corpus shuffle), then dealt round-robin into 16 balanced
+    // shards. Re-running the same epoch is bit-stable
     // (resume-safe); the next epoch is a fresh permutation by
     // construction. The rank hash is the repo-standard md5-prefix, so
     // the oracle reproduces the exact order.
@@ -2792,14 +2793,14 @@ object DataOpsQueries {
     * collected CONCURRENTLY from two driver threads (guide §2.6): each
     * leg plans and runs as its own (much smaller) query, and the slow
     * leg's stages back-fill cores the fast leg frees. Spark actions are
-    * thread-safe per session; the combined row multiset is exactly
-    * `a.unionByName(b)`'s. */
-  private def tinyResult2(s: SparkSession, a: DataFrame, b: DataFrame): DataFrame = {
+    * thread-safe per session; `b` is read by `a`'s column names, so the
+    * combined row multiset is exactly `a.unionByName(b)`'s. */
+  private[graft] def tinyResult2(s: SparkSession, a: DataFrame, b: DataFrame): DataFrame = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val fa = Future(a.collect())
-    val fb = Future(b.collect())
+    val fb = Future(b.select(a.columns.map(b(_)): _*).collect())
     val rows = Await.result(fa, Duration.Inf) ++ Await.result(fb, Duration.Inf)
     s.createDataFrame(java.util.Arrays.asList(rows: _*), a.schema)
   }

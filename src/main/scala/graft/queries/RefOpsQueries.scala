@@ -155,9 +155,9 @@ object RefOpsQueries {
     // O1: null-first keyed sort with deterministic tiebreak
     // (s2processor.py:103-106) — rows with NULL key sort first, stability
     // forced by explicit id tiebreak (Spark sort is not stable). The rank
-    // is computed DISTRIBUTED (range-partition + prefix-sum offsets,
-    // Scheduler.globalRank) — a bare Window.orderBy would serialize the
-    // whole table into one task.
+    // is computed DISTRIBUTED (sampled range buckets + prefix-sum
+    // offsets, Scheduler.globalRank) — a bare Window.orderBy would
+    // serialize the whole table into one task.
     "c17_nullfirst_sort" -> ((s, dir) => {
       val c = Fixture.customer(s, dir)
         .withColumn("k", when(col("c_custkey") % 10 === 0, lit(null).cast("double"))

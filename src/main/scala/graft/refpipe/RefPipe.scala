@@ -95,9 +95,9 @@ object RefPipe {
     * then ascending corpusid; stability forced with explicit tiebreaker
     * columns (Spark sort is not stable). Returns a rank column rather than
     * relying on physical row order. Computed distributed via
-    * [[graft.sched.Scheduler.globalRank]] (range partitions + prefix-sum
-    * offsets); a bare `Window.orderBy` would move the whole table to one
-    * task. */
+    * [[graft.sched.Scheduler.globalRank]] (sampled range buckets +
+    * prefix-sum offsets); a bare `Window.orderBy` would move the whole
+    * table to one task. */
   def o1Rank(df: DataFrame, tiebreakers: Seq[String]): DataFrame =
     graft.sched.Scheduler.globalRank(df,
       col("corpusid").isNotNull +: col("corpusid") +: tiebreakers.map(col), "o1_rank")

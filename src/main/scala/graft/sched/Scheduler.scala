@@ -1,8 +1,18 @@
 package graft.sched
 
+import scala.reflect.classTag
+
+import org.apache.spark.RangePartitioner
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+
+import graft.functions.RangeBucketExpr
 
 /** Politeness scheduler: a per-host priority queue expressed as
   * window-ranked micro-batches (north_rule). No driver-side queue — the
@@ -107,55 +117,38 @@ object Scheduler {
   }
 
   /** Order-respecting bucket assignment — the shared prelude of
-    * [[globalRank]] and [[globalPrefixSum]]. Emits a `__pid` column such
-    * that key order implies bucket order and equal keys share a bucket;
-    * boundaries never affect correctness (offsets come from actual
-    * per-bucket counts), only balance.
+    * [[globalRank]], [[globalPrefixSum]] and [[groupedPrefixSum]]. Emits a
+    * `__pid` column in [0, n) such that key order implies bucket order and
+    * equal keys share a bucket.
     *
-    * Two shapes, picked by the leading key's type:
-    *  - numeric/date/timestamp leading key → buckets from an
-    *    approx-quantile sketch of THAT KEY ALONE (a column-pruned scan,
-    *    never the full row; long→double cast is monotone, so a row
-    *    lands on one side of every cut consistently). The `__pid`
-    *    column is then a plain projection, and the in-bucket window's
-    *    own hash exchange is the ONLY corpus shuffle.
-    *  - otherwise (or when the sketch shows the key is too low-
-    *    cardinality to fill half the buckets) → `repartitionByRange` on
-    *    the FULL key + `spark_partition_id`. Costs a second exchange
-    *    (range, then the window's hash on the partition id) — the
-    *    window's ClusteredDistribution(__pid) is not satisfied by
-    *    RangePartitioning(orderCols) — but handles arbitrary key types
-    *    and spreads heavy leading-key ties by the tiebreakers. */
+    * One path for every key: range bounds are sampled ONCE per call, on
+    * the full key, by Spark's own RangePartitioner (the sampler behind a
+    * range exchange; sample size from
+    * `spark.sql.execution.rangeExchange.sampleSizePerPartition`) over a
+    * projection of the key columns alone, ordered by the callers'
+    * SortOrders — so `.desc`, nulls, string and boolean keys all work, and
+    * heavy leading-key ties spread by the tiebreakers. `__pid` is then a
+    * deterministic projection, the row's key struct looked up in those
+    * fixed bounds ([[graft.functions.RangeBucketExpr]]): the callers'
+    * rank and count branches agree on every row's bucket whichever
+    * exchange or cache feeds them, and the in-bucket window's hash
+    * exchange is the only corpus shuffle. Bounds affect balance only,
+    * never correctness: offsets come from actual per-bucket counts. */
   private def orderBuckets(df: DataFrame, orderCols: Seq[Column], n: Int): DataFrame = {
-    import org.apache.spark.sql.types._
-    // The whole sketch attempt is a PROBE with a correct fallback (bucket
-    // placement never affects correctness), so any failure — notably a
-    // SortOrder leading column (col(...).desc), which resolves in a
-    // projection's schema but is Unevaluable at codegen when the quantile
-    // sketch casts it — routes to the range path instead of throwing.
-    val cuts: Array[Double] =
-      if (n <= 1) Array.empty
-      else scala.util.Try {
-        df.select(orderCols.head.as("__k")).schema.head.dataType match {
-          case _: NumericType | DateType | TimestampType =>
-            val probs = (1 until n).map(_.toDouble / n).toArray
-            df.select(orderCols.head.cast("double").as("__k"))
-              .stat.approxQuantile("__k", probs, 1.0 / (100.0 * n))
-              .distinct.sorted
-          case _ => Array.empty[Double]
-        }
-      }.getOrElse(Array.empty)
-    if (cuts.length >= n / 2) {
-      val k = orderCols.head.cast("double")
-      // null leading key: every comparison is null → otherwise(0) →
-      // bucket 0, the front — where nulls-first ordering puts those rows
-      val bucket = cuts.foldLeft(lit(0)) { (acc, c) =>
-        acc + when(k > lit(c), 1).otherwise(0)
-      }
-      df.withColumn("__pid", bucket)
-    } else {
-      df.repartitionByRange(n, orderCols: _*).withColumn("__pid", spark_partition_id())
-    }
+    // resolve the keys as a sort would: `.desc`/nulls order kept, types known
+    val orders = df.orderBy(orderCols: _*).queryExecution.analyzed
+      .collectFirst { case s: Sort => s.order }.get
+    val keyCols = orders.map(o => Bridge.column(o.child))
+    val ordering = new LazilyGeneratedOrdering(orders.zipWithIndex.map {
+      case (o, i) => o.copy(child = BoundReference(i, o.dataType, o.nullable))
+    })
+    val bounds = new RangePartitioner(n,
+      df.select(keyCols: _*).queryExecution.toRdd.map(r => (r.copy(), null)),
+      samplePointsPerPartitionHint =
+        df.sparkSession.sessionState.conf.rangeExchangeSampleSizePerPartition)(
+      ordering, classTag[InternalRow])
+    df.withColumn("__pid",
+      Bridge.column(RangeBucketExpr(Bridge.expression(struct(keyCols: _*)), bounds)))
   }
 
   /** Distributed global row_number: bit-identical to
@@ -163,9 +156,10 @@ object Scheduler {
     * (WindowExec single-partition warning; a serial total order no cluster
     * size can fix) — but computed scalably:
     *
-    *   1. assign order-respecting buckets ([[orderBuckets]]: quantile
-    *      sketch of the leading key when numeric — one corpus shuffle
-    *      total — else range partitions on the full key);
+    *   1. assign order-respecting buckets ([[orderBuckets]]: range
+    *      bounds sampled once on the full key, `__pid` a pure function
+    *      of the row — the in-bucket window's exchange is the one corpus
+    *      shuffle);
     *   2. rank + count within each bucket;
     *   3. global rank = prefix-sum offset of preceding buckets + local
     *      rank. The offsets table is #buckets rows — its own window is
@@ -204,13 +198,13 @@ object Scheduler {
     * `valueCol` over all rows strictly before this one in `orderCols`
     * order. Same two-pass shape as [[globalRank]] (a single global
     * `sum over (order by ...)` window moves every row to ONE task):
-    * assign order-respecting buckets ([[orderBuckets]] — quantile sketch
-    * of a numeric leading key makes the in-bucket window's hash exchange
-    * the only corpus shuffle), running sum + bucket total inside each
-    * bucket, prefix-sum the #buckets-row totals table, broadcast the
-    * offsets back. Bit-identical to the single-window form
-    * (SchedulerSpec) for any total `orderCols`; correctness never
-    * depends on where the bucket boundaries land. */
+    * assign order-respecting buckets ([[orderBuckets]] — sampled range
+    * bounds, so the in-bucket window's hash exchange is the only corpus
+    * shuffle), running sum + bucket total inside each bucket, prefix-sum
+    * the #buckets-row totals table, broadcast the offsets back.
+    * Bit-identical to the single-window form (SchedulerSpec) for any
+    * total `orderCols`; correctness never depends on where the bucket
+    * boundaries land. */
   def globalPrefixSum(df: DataFrame, orderCols: Seq[Column], valueCol: Column,
       outCol: String, parts: Int = 0): DataFrame = {
     val n = if (parts > 0) parts
@@ -239,12 +233,11 @@ object Scheduler {
     * The naive form (`sum over (partition by group order by ...)`) puts
     * each whole group in one task — the hot-group trap at 10^10 rows,
     * where one source/language/bucket dominates the corpus. Here the
-    * buckets come from [[orderBuckets]] over the ORDER key alone (a
-    * numeric leading key — the callers' id/hash — takes the
-    * quantile-sketch path, so the group column's type and cardinality
-    * never force a range pass), the in-bucket running sums window on
-    * (bucket, group) — every group is spread across ALL buckets, so a
-    * hot group rides ~#buckets tasks instead of one — and the
+    * buckets come from [[orderBuckets]] over the ORDER key alone (the
+    * group column never enters the sampled bounds), the in-bucket
+    * running sums window on (bucket, group) — every group is spread
+    * across ALL buckets, so a hot group rides ~#buckets tasks instead of
+    * one — and the
     * per-(group, bucket) offsets table (#groups × #buckets rows, its own
     * window partitioned by group over the tiny table) joins back via
     * broadcast. ONE corpus shuffle total, same as [[globalPrefixSum]].
@@ -286,7 +279,6 @@ object Scheduler {
     * silently inflate the frontier per extra rule). Empty/null prefix = no
     * restriction; hosts with no rules pass. */
   def robotsFilter(frontier: DataFrame, robots: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
     val perHost = robots
       .filter(col("path_prefix").isNotNull && col("path_prefix") =!= "")
       .groupBy(col("host").as("__rhost"))

@@ -801,6 +801,16 @@ class OpsSpec extends SparkSpec {
       "weighted top-k must not plan a window sort")
   }
 
+  test("tinyResult2 unions its legs by column name, not by position") {
+    import spark.implicits._
+    val a = Seq(("en", 25L, 7L)).toDF("pred_lang", "pct", "v")
+    val b = Seq((9L, 50L, "de")).toDF("v", "pct", "pred_lang")
+    val got = graft.queries.DataOpsQueries.tinyResult2(spark, a, b)
+    assert(got.columns.toSeq == a.columns.toSeq)
+    assert(got.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet ==
+      a.unionByName(b).collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet)
+  }
+
   test("e6 image-corpus chain recovers the planted ground truth end to end") {
     val dir = "/root/testdata/sf0.001"
     val n = spark.read.parquet(s"$dir/documents.parquet").count()

@@ -81,12 +81,20 @@ class SchedulerSpec extends SparkSpec {
     val dist = Scheduler.globalRank(df, keys, "rk", parts = 8)
       .select("id", "rk").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == single)
-    // boolean leading key → the generic fallback: range partitioning present
-    val plan = Scheduler.globalRank(df, keys, "rk", parts = 8)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning"), s"expected range exchange in:\n$plan")
-    // a SortOrder leading key (desc) is valid input for the range path —
-    // the quantile probe must classify it, not throw at analysis time
+    // boolean- and string-led keys take the same sampled-bounds path as
+    // numeric ones: the corpus crosses the wire exactly once (measured on
+    // a checkpointed copy, so the input's own repartition is not counted)
+    val strKeys = Seq(col("grp"), col("band"), col("id"))
+    val strSingle = df.withColumn("rk", row_number().over(Window.orderBy(strKeys: _*)))
+      .select("id", "rk").collect().map(r => r.getLong(0) -> r.getInt(1).toLong).toMap
+    val flat = df.localCheckpoint()
+    Seq(keys, strKeys).foreach { k =>
+      val recs = shuffleRecords(Scheduler.globalRank(flat, k, "rk", parts = 8))
+      assert(recs.count(_ >= 5000) == 1, s"expected 1 corpus-sized shuffle, got $recs")
+    }
+    assert(Scheduler.globalRank(df, strKeys, "rk", parts = 8)
+      .select("id", "rk").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == strSingle)
+    // a SortOrder key (desc) orders the sampled bounds too
     val descKeys = Seq(col("id").desc, col("band"))
     val descSingle = df.withColumn("rk", row_number().over(Window.orderBy(descKeys: _*)))
       .select("id", "rk").collect().map(r => r.getLong(0) -> r.getInt(1).toLong).toMap
@@ -130,14 +138,42 @@ class SchedulerSpec extends SparkSpec {
     val q = Scheduler.globalRank(df, keys, "rk", parts = 8)
     val dist = q.select("id", "rk").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == single)
-    // quantile-bucket path: no range exchange; the corpus crosses the wire
-    // exactly once (the in-bucket window's hash exchange) — the offsets
-    // branch aggregates map-side, so its exchange carries only partials
+    // no range exchange; the corpus crosses the wire exactly once (the
+    // in-bucket window's hash exchange) — the offsets branch aggregates
+    // map-side, so its exchange carries only partials
     val q2 = Scheduler.globalRank(df, keys, "rk", parts = 8)
     val recs = shuffleRecords(q2)
     assert(!q2.queryExecution.executedPlan.toString.contains("rangepartitioning"))
     assert(recs.count(_ >= 5000) == 1, s"expected 1 corpus-sized shuffle, got $recs")
     assert(recs.count(_ > 1000) == 1, s"other shuffles must carry partials only: $recs")
+  }
+
+  test("globalRank and globalPrefixSum match the single window over a persisted string-led frame") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // a cached input gives the rank and count branches separate exchanges
+    // (no exchange reuse), so each branch must bucket every row alike
+    val base = (0 until 5000).map(i => (s"k${(i * 7919) % 5000}", i.toLong, (i % 13).toLong))
+      .toDF("s", "id", "v").repartition(4)
+    val df = base.unionByName(base.filter(col("id") % 97 === 0)
+        .withColumn("id", col("id") + 5000))
+      .persist()
+    try {
+      val keys = Seq(col("s"), col("id"))
+      val before = Window.orderBy(keys: _*).rowsBetween(Window.unboundedPreceding, -1)
+      val single = df
+        .withColumn("rk", row_number().over(Window.orderBy(keys: _*)).cast("long"))
+        .withColumn("off", coalesce(sum(col("v")).over(before), lit(0L)))
+        .select("id", "rk", "off").collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(single.size == 5052)
+      val rk = Scheduler.globalRank(df, keys, "rk", parts = 8)
+        .select("id", "rk").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val off = Scheduler.globalPrefixSum(df, keys, col("v"), "off", parts = 8)
+        .select("id", "off").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(rk == single.map { case (id, (r, _)) => id -> r })
+      assert(off == single.map { case (id, (_, o)) => id -> o })
+    } finally { df.unpersist(); () }
   }
 
   test("globalPrefixSum is bit-identical to the single-partition window cumsum") {
@@ -152,7 +188,7 @@ class SchedulerSpec extends SparkSpec {
     val dist = Scheduler.globalPrefixSum(df, Seq(col("id")), col("v"), "off", parts = 8)
       .select("id", "off").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == single)
-    // numeric key → quantile-bucket path: one corpus shuffle, no range pass
+    // one corpus shuffle, no range pass
     val q = Scheduler.globalPrefixSum(df, Seq(col("id")), col("v"), "off", parts = 8)
     val recs = shuffleRecords(q)
     assert(!q.queryExecution.executedPlan.toString.contains("rangepartitioning"))
